@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Scored-artifact routing: ONLY the canonical sf0.1 dir (exact
     * basename — `endsWith("sf0.1")` also matched the zsf0.1 anchor
@@ -14,6 +14,24 @@ object Bench {
     if (new java.io.File(sfDir.stripSuffix("/")).getName == "sf0.1") {
       if (cpus == "32") "bench.json" else s"bench_c$cpus.json"
     } else "bench_adhoc.json"
+
+  /** Time one registered row: build it and drain its physical plan.
+    * FULL-evaluation count (round 11): Dataset.count() lets Catalyst
+    * prune every column — a pure projection/window query collapses to
+    * a bare scan count, so such rows timed the SCAN, not their work.
+    * toRdd executes the real physical plan (all output columns) and
+    * the RDD count just drains it. A row that throws (while building
+    * or while running) is an error, never a timing: Left carries its
+    * exception class.
+    */
+  private[graft] def timeRow(fn: (SparkSession, String) => DataFrame,
+      spark: SparkSession, sfDir: String): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).queryExecution.toRdd.count()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(e.getClass.getName) }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -84,7 +102,7 @@ object Bench {
     // absorbs its JIT — r4's dedup_exact read 1.63s in the suite vs
     // 0.72s warmed (plan unchanged). The min of two full passes charges
     // every query its steady-state cost.
-    def pass(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
+    def pass(): Map[String, Either[String, Double]] = SparkEntry.queries.map { case (name, fn) =>
       // drain PREVIOUS queries' suite state outside the timed window:
       // localCheckpoint blocks have no auto-unpersist hook and
       // accumulate in the one-JVM MemoryStore across the suite — by
@@ -102,25 +120,22 @@ object Bench {
       try org.apache.spark.graftbench.BroadcastDrain.drain(spark.sparkContext)
       catch { case _: Throwable => }
       System.gc()
-      val t0 = System.nanoTime()
-      // FULL-evaluation count (round 11): Dataset.count() lets Catalyst
-      // prune every column — a pure projection/window query collapses
-      // to a bare scan count, so such rows timed the SCAN, not their
-      // work. toRdd executes the real physical plan (all output
-      // columns) and the RDD count just drains it — the honest action
-      // for a bench that certifies operator cost.
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> timeRow(fn, spark, sfDir)
     }
     val first = pass()
     val second = pass()
-    val results = first.map { case (k, v) => k -> math.min(v, second(k)) }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    // a row that threw in either pass is an error, not a timing
+    val errors = first.keys.flatMap(k =>
+      first(k).left.toOption.orElse(second(k).left.toOption).map(k -> _)).toMap
+    val results =
+      for ((k, Right(a)) <- first; b <- second(k).toOption) yield k -> math.min(a, b)
+    def jsonMap(m: Map[String, String]): String =
+      m.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val qs = jsonMap(results.map { case (k, v) => k -> v.toString })
+    val errs = jsonMap(errors.map { case (k, v) => k -> s"\"$v\"" })
+    val total = results.values.sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":$loadAvg}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","loadavg_start":$loadAvg}"""
     println(line)
     // also persist the full line as an artifact: the driver's log capture
     // keeps only the stdout tail, which truncated 24 per-query rows from
@@ -141,7 +156,7 @@ object Bench {
     // ~200 bytes — it always survives the tail — and names the artifact
     // that holds the full per-query map.
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","cpus":$cpus,"loadavg_start":$loadAvg,"artifact":"$out"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"sf":"$sfDir","cpus":$cpus,"loadavg_start":$loadAvg,"artifact":"$out"}"""
     println(summary)
     spark.stop()
   }

@@ -340,6 +340,29 @@ object SparkEntry {
 
   private val minhashClusterCtes = minhashPairCtes + closureCtes("mpairs")
 
+  /** crawl_clean's extraction scratch dir, scoped by PID (r16 ADVICE):
+    * two concurrent sessions on one box (a bench and a verify run)
+    * raced on a shared dir — one run's overwrite deleted files the
+    * other's in-flight scan was reading. Within a JVM the dir is
+    * overwritten per invocation. The returned frame reads it lazily,
+    * so it cannot be removed after the call; a shutdown hook deletes
+    * the tree when the JVM exits instead of leaving one dir per run
+    * under java.io.tmpdir.
+    */
+  private lazy val crawlCleanScratch: String = {
+    val d = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_crawl_clean_ex_${java.lang.ProcessHandle.current().pid()}")
+    sys.addShutdownHook {
+      if (java.nio.file.Files.exists(d)) {
+        val paths = java.nio.file.Files.walk(d)
+        try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        finally paths.close()
+      }
+    }
+    d.toString
+  }
+
   /** Repo-local cache dir for the persisted-store probe queries, keyed
     * by the sf dir so sf0.01 (correctness) and sf0.1 (bench) never
     * share a store. First invocation of a `_probe` query builds and
@@ -3331,18 +3354,9 @@ object SparkEntry {
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
           .cast("long").as("doc_id"),
         col("body").cast("string").as("html"))
-      // scratch path scoped by PID (r16 ADVICE): two concurrent
-      // sessions on one box (a bench and a verify run) raced on the
-      // shared dir — one run's overwrite deleted files the other's
-      // in-flight scan was reading. Per-JVM scoping keeps dir growth
-      // bounded (overwritten per invocation within a JVM) while
-      // making cross-process interference impossible.
       graft.pipeline.Pipeline.crawlClean(resp, "doc_id", "html",
         minQuality = 0.3, budget = 2048,
-        scratchDir = Some(java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_crawl_clean_ex_${java.lang.ProcessHandle.current().pid()}")
-          .toString))
+        scratchDir = Some(crawlCleanScratch))
     }),
 
     "jsonl_roundtrip" -> ((s, dir) => {

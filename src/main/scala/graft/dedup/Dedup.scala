@@ -210,7 +210,7 @@ object Dedup {
     * [[minhashLsh]] (exact-Jaccard verify) and [[editDistancePairs]]
     * (Levenshtein verify) — the ids-only shuffle discipline lives here.
     */
-  private[dedup] def lshCandidatePairs(df: DataFrame, idCol: String,
+  private[graft] def lshCandidatePairs(df: DataFrame, idCol: String,
       textCol: String, shingleSize: Int, bands: Int, rowsPerBand: Int,
       maxBucket: Int): DataFrame = {
     val banded = bandKeysOf(
@@ -351,7 +351,17 @@ object Dedup {
     * arrays collected and broadcast, 44 s where every candidate stage
     * summed to 7 s).
     */
-  private val LshVerifyBroadcastMaxPairs: Long = 1L << 20
+  private[graft] val LshVerifyBroadcastMaxPairs: Long = 1L << 20
+
+  /** The size-adaptive verify side shared by [[minhashLsh]] and
+    * [[verifyCandidates]]: the melted candidate sliver is broadcast
+    * while its COUNTED pair total is within
+    * [[LshVerifyBroadcastMaxPairs]], and built in a shuffled-hash join
+    * past it — never a broadcast or sort of the corpus side.
+    */
+  private[graft] def verifySide(melted: DataFrame, nPairs: Long): DataFrame =
+    if (nPairs <= LshVerifyBroadcastMaxPairs) broadcast(melted)
+    else melted.hint("shuffle_hash")
 
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 2,
@@ -397,10 +407,7 @@ object Dedup {
     // exchange, kernel runs once — with the counted checkpoint
     // guarding the broadcast bound and the shuffled-hash fallback
     // (build = candidate side) past it.
-    val meltedSide =
-      if (nPairs <= LshVerifyBroadcastMaxPairs) broadcast(melted)
-      else melted.hint("shuffle_hash")
-    shs.join(meltedSide, "doc_id")
+    shs.join(verifySide(melted, nPairs), "doc_id")
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(
         first(when(col("doc_id") === col("doc_a"), col("sh")),
@@ -1339,10 +1346,7 @@ object Dedup {
     val nCand = candC.count()
     val melted = candC.select(col("doc_a"), col("doc_b"),
       explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-    val meltedSide =
-      if (nCand <= LshVerifyBroadcastMaxPairs) broadcast(melted)
-      else melted.hint("shuffle_hash")
-    hashed.join(meltedSide, "doc_id")
+    hashed.join(verifySide(melted, nCand), "doc_id")
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(
         first(when(col("doc_id") === col("doc_a"), col("_hs")),

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * ([[build]] of the survivors) — the store grows with the corpus
   * without ever being rebuilt.
   *
-  * Measured (`graft.ProbeSigStore`, zsf1 twin, 1% increment): direct
-  * 2.35s vs persisted-store 1.93s per ingest. The delta IS the
+  * Measured in round 5 (zsf1 twin, 1% increment): direct 2.35s vs
+  * persisted-store 1.93s per ingest. The delta IS the
   * corpus-side signature kernel the store eliminates — O(corpus)
   * md5-per-shingle work that grows linearly with the corpus while the
   * stored probe stays O(increment); at 50k docs it is ~0.4s against a

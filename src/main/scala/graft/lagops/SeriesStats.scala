@@ -222,7 +222,9 @@ object SeriesStats {
     * differed by one column, so ReuseExchange never fired) and the
     * join re-exchanged every WIDE corpus row on (series, season) into
     * a sort-merge join — 3 corpus exchanges, 2 scans, and a 7×/decade
-    * anchor slope; the window form measures ~2×/decade (StlProbe).
+    * anchor slope (2.9 s / 20.5 s isolated at zsf1/zsf10, round 11);
+    * the window form measures ~2×/decade (0.90 / 1.90 / 4.85 s
+    * in-suite at zsf0.1/zsf1/zsf10, round 11).
     * An unbounded frame here is the O(partition) single-pass kind,
     * not the quadratic mid-partition-to-unboundedFollowing fence
     * class. NULL season/series values form their own window groups

@@ -395,9 +395,10 @@ object Ivf {
   }
 
   /** Literal-path fit + two-level assignment as one public call — the
-    * comparison surface IvfSpec and HierForestProbe pin
-    * [[assignHierR]] against (same output shape: `_id`, `_v`,
-    * coarse_id, list_id).
+    * comparison surface IvfSpec pins [[assignHierR]] against at 36
+    * lists (same output shape: `_id`, `_v`, coarse_id, list_id); in
+    * round 13 the two paths also assigned 200k/400k vectors with 0
+    * mismatches at 16 384 and 262 144 lists.
     */
   def assignHierLiteral(df: DataFrame, idCol: String, vecCol: String,
                         nlist: Int, iters: Int, fitSamplePct: Int,

@@ -44,11 +44,3 @@ object BroadcastDrain {
     ids.size
   }
 }
-
-/** Dev-probe utility: block until the listener bus has delivered all
-  * queued events (the API is `private[spark]`), so per-query
-  * stage/task metric counters read complete totals.
-  */
-object ListenerSync {
-  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-}

@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * basename must match exactly — and in r16 the driver's own c8
   * scaling run overwrote the scored c32 file because routing keyed on
   * sfDir alone: a different core count must land in its own artifact.
+  * Also fences the per-row timing: a row that throws is recorded as an
+  * error, never as seconds.
   */
 class BenchRoutingSpec extends AnyFunSuite {
   test("only the exact sf0.1 basename at 32 cores routes to the scored artifact") {
@@ -26,5 +28,17 @@ class BenchRoutingSpec extends AnyFunSuite {
     assert(Bench.artifactFor("/root/testdata/sf0.1/", "4") == "bench_c4.json")
     // non-canonical scale stays ad-hoc regardless of core count
     assert(Bench.artifactFor("/root/testdata/sf0.01", "8") == "bench_adhoc.json")
+  }
+
+  test("a row that throws is an error carrying its exception class, not a timing") {
+    val spark = TestSpark.spark
+    assert(Bench.timeRow((_, _) => throw new IllegalStateException("boom"),
+      spark, "unused") == Left("java.lang.IllegalStateException"))
+    // a frame that builds but fails when its plan is drained
+    val atRun = Bench.timeRow((s, _) => s.range(1).selectExpr("raise_error('boom')"),
+      spark, "unused")
+    assert(atRun.isLeft, atRun)
+    val ok = Bench.timeRow((s, _) => s.range(10).toDF(), spark, "unused")
+    assert(ok.exists(_ >= 0.0), ok)
   }
 }

@@ -204,6 +204,21 @@ class GoldenLagSpec extends AnyFunSuite {
     val p = out.queryExecution.executedPlan.toString
     assert(p.linesIterator.count(
       _.matches(".*(\\*\\(\\d+\\) )?Window( |\\[).*")) == 1, p)
+
+    // a leading null: no term exists at t0 (zero denominator) ⇒ NULL,
+    // the oracle's x / 0.0; alpha=0.5, W=3 over [null, 2, 4]:
+    //   t0: null   t1: 2 / 1 = 2   t2: (4 + .5*2) / 1.5 = 10/3
+    val s = TestSpark.spark
+    import s.implicits._
+    val gapped = Seq((0L, None), (1L, Some(2.0)), (2L, Some(4.0)))
+      .toDF("t", "value")
+    val gappedVals = Ewma.over(gapped, "value",
+        LagSpec(Seq("t"), Nil, Seq(1), None), alpha = 0.5, window = 3,
+        maxTailMass = 0.2)
+      .orderBy("t").select("value_ewma").collect().toSeq
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    assert(gappedVals == Seq(None, Some(2.0), Some(BigDecimal(10.0 / 3)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
   }
 
   test("ewma: rejects a window that drops non-negligible tail mass") {

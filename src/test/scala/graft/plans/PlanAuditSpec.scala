@@ -1,6 +1,11 @@
 package graft.plans
 
 import graft.{SparkEntry, TestSpark}
+import graft.dedup.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint, SHUFFLE_HASH}
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regressions for the registered driver queries: the shapes
@@ -25,6 +30,10 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("lag_2d_partitioned collapses all lags into one Window pass") {
     assert(opCount(plan("lag_2d_partitioned"), "Window") == 1)
+    val entry = SparkEntry.entry(spark)
+    assert(opCount(entry.queryExecution.executedPlan.toString, "Window") == 1)
+    // SparkEntry.entry, the library's smoke entry point, returns rows
+    assert(entry.count() > 0)
   }
 
   test("embedding_neardup has no nested-loop pair scan") {
@@ -164,7 +173,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // form this fences against recomputed the entire scan→shuffle→
     // window pipeline (ReuseExchange never fired) and re-exchanged
     // every wide corpus row on (series, season) into an SMJ —
-    // 3 exchanges, 2 scans, 7×/decade at the anchors (StlProbe).
+    // 3 exchanges, 2 scans, 7×/decade at the anchors (2.9 s / 20.5 s
+    // isolated at zsf1/zsf10, round 11).
     val p = plan("stl_seasonal")
     assert(opCount(p, "Exchange") == 1, s"expected exactly 1 exchange:\n$p")
     assert(opCount(p, "Window") == 2, s"expected 2 window ops:\n$p")
@@ -210,24 +220,37 @@ class PlanAuditSpec extends AnyFunSuite {
   test("dedup_minhash band exchanges carry no shingle arrays") {
     // same payload discipline as the ANN audit: only (doc_id, band,
     // bucket) may ride the LSH shuffles; shingle arrays re-join for the
-    // few candidate pairs
+    // few candidate pairs. The band join runs inside minhashLsh's
+    // candidate-pair checkpoint job, so the audit reads that subplan —
+    // lshCandidatePairs at the row's arguments and the geometry AUTO
+    // resolves to — and the timed plan must read the checkpoint, never
+    // replay the band join.
     val conf = spark.conf
     val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
     val prevBc = conf.get("spark.sql.autoBroadcastJoinThreshold")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def bandExchanges(p: SparkPlan) = p.collect {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.toString.contains("band") ||
+            e.outputPartitioning.toString.contains("bucket") => e
+    }
     try {
-      val plan = SparkEntry.queries("dedup_minhash")(spark, dir)
+      val docs = graft.sources.Tables.documents(spark, dir)
+      val (bands, rows) = Dedup.scaledBandGeometry(docs.count(), 0.5)
+      val pairsPlan = Dedup.lshCandidatePairs(docs, "doc_id", "text",
+        shingleSize = 3, bands = bands, rowsPerBand = rows, maxBucket = 64)
         .queryExecution.executedPlan
-      val bandExchanges = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-            if e.outputPartitioning.toString.contains("band") ||
-              e.outputPartitioning.toString.contains("bucket") => e
-      }
-      assert(bandExchanges.nonEmpty, "expected a shuffled band-bucket join")
-      for (e <- bandExchanges; attr <- e.output)
+      val inPairs = bandExchanges(pairsPlan)
+      assert(inPairs.nonEmpty, s"expected a shuffled band-bucket join:\n$pairsPlan")
+      for (e <- inPairs; attr <- e.output)
         assert(!attr.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType],
           s"band exchange carries array column ${attr.name}")
+      val timed = SparkEntry.queries("dedup_minhash")(spark, dir)
+        .queryExecution.executedPlan
+      assert(bandExchanges(timed).isEmpty, s"band join replayed in the timed plan:\n$timed")
+      assert(timed.collect { case r: RDDScanExec => r }.nonEmpty,
+        s"timed plan does not read the checkpointed pairs:\n$timed")
     } finally {
       conf.set("spark.sql.adaptive.enabled", prevAqe)
       conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
@@ -279,18 +302,32 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("ngram_jaccard carries no broadcast hint") {
-    // every frame in this operator is per-document, so an explicit
-    // broadcast() hint (round 1 broadcast O(n_docs) set sizes) is always
-    // a scale regression. Size-based broadcasts the planner picks at
-    // test SF are fine — those adapt away on a real corpus. The df-cap
-    // probe's shuffle_hash hint is the opposite: it FORBIDS broadcast
-    // off a bad estimate (the spanPairs lesson), so only broadcast
-    // hints are fenced.
+  test("ngram_jaccard broadcasts only the counted candidate sliver") {
+    // every corpus frame in this operator is per-document, so a
+    // broadcast() of any of them (round 1 broadcast O(n_docs) set
+    // sizes) is a scale regression. The one broadcast allowed is the
+    // verify side: the melted candidate pairs, read from their counted
+    // checkpoint, broadcast only while the count is within
+    // LshVerifyBroadcastMaxPairs; past it the same side takes the
+    // shuffle_hash branch. The df-cap probe's shuffle_hash hint FORBIDS
+    // broadcast off a bad estimate (the spanPairs lesson), so only
+    // broadcast hints are fenced.
     val analyzed = SparkEntry.queries("ngram_jaccard")(spark, dir)
-      .queryExecution.analyzed.toString
-    assert(!analyzed.toLowerCase.matches("(?s).*resolvedhint[^\\n]*broadcast.*"),
-      s"broadcast hint in ngram_jaccard:\n$analyzed")
+      .queryExecution.analyzed
+    val broadcasts = analyzed.collect {
+      case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h
+    }
+    assert(broadcasts.size == 1, s"expected one broadcast hint:\n$analyzed")
+    for (h <- broadcasts)
+      assert(h.child.collectLeaves().forall(_.isInstanceOf[LogicalRDD]),
+        s"broadcast hint over a corpus frame:\n$h")
+    def strategies(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case h: ResolvedHint => h.hints.strategy
+    }.flatten
+    val melted = spark.range(4).toDF("doc_id")
+    val bound = Dedup.LshVerifyBroadcastMaxPairs
+    assert(strategies(Dedup.verifySide(melted, bound)) == Seq(BROADCAST))
+    assert(strategies(Dedup.verifySide(melted, bound + 1)) == Seq(SHUFFLE_HASH))
   }
 
   test("topk_ngrams plans a distributed top-k, not a global sort") {
